@@ -36,8 +36,10 @@ class ModelRegistry(registryPath: String) {
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }
 
-  /** All entries in append order. */
-  def entries(): Seq[ModelEntry] = {
+  /** All entries in append order. Shares the append lock, so a reader of
+    * this instance never sees a half-written line.
+    */
+  def entries(): Seq[ModelEntry] = synchronized {
     val p = Paths.get(registryPath)
     if (!Files.exists(p)) Seq.empty
     else Files.readAllLines(p, StandardCharsets.UTF_8).asScala.toSeq

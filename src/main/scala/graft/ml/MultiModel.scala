@@ -76,14 +76,21 @@ object MultiModel {
 
   /** S7 — persist + register (replaces config.ini mutation,
     * train.py:163-188).
+    *
+    * Each save publishes a new version at `<dir>/<name>/v<createdAtMs>-<uuid>`
+    * and appends its registry entry only once the write has finished. A
+    * published directory is never rewritten, so a reader that resolved an
+    * older entry can still load it while a retrain of the same name runs,
+    * and two concurrent saves of one name land in distinct directories.
+    * Old versions stay on disk: the registry's history points at them.
     */
   def save(t: Trained, dir: String, registry: ModelRegistry,
       name: String, metrics: Map[String, Double] = Map.empty): String = {
-    val path = s"$dir/$name"
-    t.pipeline.write.overwrite().save(path)
+    val createdAtMs = System.currentTimeMillis()
+    val path = s"$dir/$name/v$createdAtMs-${java.util.UUID.randomUUID()}"
+    t.pipeline.write.save(path)
     registry.append(ModelEntry(name, path, t.modelType, t.params,
-      metrics ++ Map("train_accuracy" -> t.trainAccuracy),
-      System.currentTimeMillis()))
+      metrics ++ Map("train_accuracy" -> t.trainAccuracy), createdAtMs))
     path
   }
 
